@@ -112,12 +112,6 @@ def updated_priority(priority, inc: int):
     return F.when(upd == float("inf"), F.lit(float(inc))).otherwise(upd)
 
 
-def scaled_priority(priority, inc: int):
-    """PriorityTracker.getScaledPriority — comparable across detectors
-    with different landmarks/intervals: ``p - inc(now)``."""
-    return priority - F.lit(float(inc))
-
-
 def update_priority_py(old: float | None, inc: int) -> float:
     """Driver-side twin of :func:`updated_priority` (for tests and
     single-entity callers)."""
@@ -360,12 +354,11 @@ def _drop_state_keys(spark: SparkSession, state_dir: str,
                      key_fields: list[T.StructField]) -> None:
     """Drop the state rows (scalar AND joint layouts) of the given
     entity keys — the model-byte release of a shared-cache eviction."""
-    from .detector import _state_path, _swap_state_dir
+    from .detector import _state_paths, _swap_state_dir
 
     key_cols = [f.name for f in key_fields]
     kdf = local_df(spark, keys, T.StructType(key_fields))
-    for ident in (detector_id, f"{detector_id}__joint"):
-        spath = _state_path(state_dir, ident)
+    for spath in _state_paths(state_dir, detector_id):
         if not os.path.exists(spath):
             continue
         state = spark.read.parquet(spath)

@@ -23,10 +23,16 @@ handling (``ResultProcessor.java:204-331`` fan-out; scores per entity).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field as dc_field
+import os
+import shutil
+from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.window import Window
+
 from .localdf import local_df
 
 from .features import feature_matrix, score_entities
@@ -115,42 +121,32 @@ def _attribution_ring(result: DataFrame, feats: list[str],
     the mapping's presence contract (raw attribution null at grade ≤ 0,
     ``ModelUtil.java:133-136``; approx start only when relativeIndex
     < 0, ``AnomalyResult.java:489-491``)."""
+    def by_feature(arr: str, rnd: bool = False) -> F.Column:
+        vals = [F.element_at(arr, j + 1) for j in range(len(feats))]
+        return F.array(*[
+            F.struct(F.lit(n).alias("feature_id"),
+                     (F.round(v, 6) if rnd else v).alias("data"))
+            for n, v in zip(feats, vals)])
+
     graded = F.col("anomaly_grade") > 0
     anomalous = graded & F.col("_attr").isNotNull()
-    result = result.withColumn(
-        "relevant_attribution",
-        F.when(anomalous, F.array(*[
-            F.struct(F.lit(n).alias("feature_id"),
-                     F.round(F.element_at("_attr", j + 1), 6)
-                     .alias("data"))
-            for j, n in enumerate(feats)])))
-    # expected values come from the model on every scored row — gate
-    # on the grade alone
-    result = result.withColumn(
-        "expected_values",
-        F.when(graded & F.col("_exp").isNotNull(), F.array(F.struct(
-            F.lit(1.0).alias("likelihood"),
-            F.array(*[
-                F.struct(F.lit(n).alias("feature_id"),
-                         F.element_at("_exp", j + 1).alias("data"))
-                for j, n in enumerate(feats)]).alias("value_list")))))
-    result = result.withColumn(
-        "relative_index", F.when(anomalous, F.col("_rel")))
-    result = result.withColumn(
-        "approx_anomaly_start_time",
-        F.when(anomalous & (F.col("_rel") < 0),
-               F.timestamp_millis(
-                   F.unix_millis(F.col("data_start_time")
-                                 .cast("timestamp"))
-                   + F.col("_rel").cast("long") * interval_ms)))
-    return result.withColumn(
-        "past_values",
-        F.when(anomalous & (F.col("_rel") < 0)
-               & F.col("_past").isNotNull(),
-               F.array(*[
-                   F.struct(F.lit(n).alias("feature_id"),
-                            F.element_at("_past", j + 1).alias("data"))
-                   for j, n in enumerate(feats)])))
+    past = anomalous & (F.col("_rel") < 0)
+    return (result
+            .withColumn("relevant_attribution",
+                        F.when(anomalous, by_feature("_attr", rnd=True)))
+            # expected values come from the model on every scored row —
+            # gate on the grade alone
+            .withColumn("expected_values", F.when(
+                graded & F.col("_exp").isNotNull(), F.array(F.struct(
+                    F.lit(1.0).alias("likelihood"),
+                    by_feature("_exp").alias("value_list")))))
+            .withColumn("relative_index", F.when(anomalous, F.col("_rel")))
+            .withColumn("approx_anomaly_start_time", F.when(
+                past, F.timestamp_millis(
+                    F.unix_millis(F.col("data_start_time").cast("timestamp"))
+                    + F.col("_rel").cast("long") * interval_ms)))
+            .withColumn("past_values", F.when(
+                past & F.col("_past").isNotNull(), by_feature("_past"))))
 
 
 RING_COLS = ["relevant_attribution", "expected_values", "relative_index",
@@ -172,16 +168,18 @@ def _check_attr_threshold(alert_threshold, det: Detector) -> None:
             f"alert_threshold={det.anomaly_threshold} to the model")
 
 
-def _swap_state_dir(frame: DataFrame, spath: str,
-                    field_names: list[str]) -> None:
-    """Atomic-ish state rewrite: write ``frame[field_names]`` to a tmp
-    dir, then swap directories (the crash window is two renames, and
-    the rewritten data survives either way)."""
-    import os
-    import shutil
-
+def _swap_state_dir(frame: DataFrame | str, spath: str,
+                    field_names: list[str] | None = None) -> None:
+    """Atomic-ish state rewrite: write ``frame[field_names]`` (or copy
+    the directory ``frame`` names) to a tmp dir, then swap directories
+    (the crash window is two renames, and the rewritten data survives
+    either way)."""
     tmp, trash = spath + ".__tmp__", spath + ".__old__"
-    frame.select(*field_names).write.mode("overwrite").parquet(tmp)
+    if isinstance(frame, str):
+        shutil.rmtree(tmp, ignore_errors=True)
+        shutil.copytree(frame, tmp)
+    else:
+        frame.select(*field_names).write.mode("overwrite").parquet(tmp)
     shutil.rmtree(trash, ignore_errors=True)
     if os.path.exists(spath):
         shutil.move(spath, trash)
@@ -189,17 +187,56 @@ def _swap_state_dir(frame: DataFrame, spath: str,
     shutil.rmtree(trash, ignore_errors=True)
 
 
-def _feature_imputed(feats: list[str]) -> F.Column:
-    """``feature_imputed`` result field (anomaly-results.json nested
-    {feature_id, imputed}; ``ModelUtil.calculateImputedFeatures``):
-    a bucket the imputation step materialized carries ``doc_count``
-    0 — this engine's imputation fills whole missing buckets, so the
-    flag is uniform across features (the reference flags per-NaN
-    coordinate; a present bucket here never has a filled feature)."""
-    return F.array(*[
-        F.struct(F.lit(n).alias("feature_id"),
-                 (F.col("doc_count") == 0).alias("imputed"))
-        for n in feats])
+def _window_query(cfg, lo: int, hi: int) -> dict:
+    """``cfg.filter_query`` (a detector or forecaster config) narrowed
+    to ``[lo, hi)`` on its time field."""
+    rng = {"range": {cfg.time_field: {"gte": lo, "lt": hi}}}
+    return ({"bool": {"filter": [rng, cfg.filter_query]}}
+            if cfg.filter_query else rng)
+
+
+def _window_matrix(src: DataFrame, det: Detector, lo: int,
+                   hi: int) -> DataFrame:
+    """``det``'s per-(entity, bucket) features over ``[lo, hi)``; a
+    single-stream detector groups under the constant ``_g``."""
+    fm = feature_matrix(src, det.time_field, det.interval_ms,
+                        det.feature_specs,
+                        entity_cols=tuple(det.category_fields),
+                        filter_cond=compile_filter(
+                            src, _window_query(det, lo, hi)))
+    return fm if det.category_fields else fm.withColumn("_g", F.lit("_"))
+
+
+def _bucket_ms() -> F.Column:
+    return F.unix_millis(F.col("bucket_start").cast("timestamp"))
+
+
+def _scalar_melt(df: DataFrame, gcols: list[str], feats: list[str],
+                 *cols) -> DataFrame:
+    """One ``(_feat, _v)`` row per feature of every bucket row."""
+    pairs = ", ".join(f"'{n}', cast(`{n}` as double)" for n in feats)
+    return df.select(*gcols, *cols, F.expr(
+        f"stack({len(feats)}, {pairs})").alias("_feat", "_v"))
+
+
+def _joint_melt(df: DataFrame, gcols: list[str], feats: list[str],
+                *cols) -> DataFrame:
+    """One ``_vec`` per complete-feature bucket row (the joint model
+    needs the whole vector)."""
+    complete = F.col(feats[0]).isNotNull()
+    for n in feats[1:]:
+        complete = complete & F.col(n).isNotNull()
+    return df.filter(complete).select(*gcols, *cols, F.array(
+        *[F.col(n).cast("double") for n in feats]).alias("_vec"))
+
+
+def _check_fixed_values(det: Detector) -> None:
+    missing = [f for f in det.feature_specs
+               if f not in (det.imputation_values or {})]
+    if det.imputation_method == "fixed_values" and missing:
+        raise ValueError(
+            f"fixed_values imputation needs a value per feature; "
+            f"missing {missing}")
 
 
 def _rule_suppressed(det: Detector, feats: list[str]) -> F.Column:
@@ -244,6 +281,62 @@ def _rule_suppressed(det: Detector, feats: list[str]) -> F.Column:
     return any_rule
 
 
+def _anomaly_rows(out: DataFrame, det: Detector, feats: list[str],
+                  score: F.Column | None = None, ring: bool = False,
+                  imputed: Callable[[str], F.Column] | None = None,
+                  ) -> DataFrame:
+    """Scored wide rows → anomaly-result rows; every runner builds its
+    rows here.
+
+    ``out`` carries ``bucket_start``, the feature columns, ``_cnt``
+    (scored history, for the confidence ramp) and, when the detector
+    has suppression rules, ``_exp_<f>``.  ``score`` defaults to the
+    max |``_z_<f>``| across features.  ``ring`` attaches the
+    attribution ring (:func:`_attribution_ring`).  ``imputed(f)`` is
+    feature ``f``'s imputed flag (default: the ``_imp_<f>`` column)."""
+    if score is None:
+        zs = [F.abs(F.col(f"_z_{n}")) for n in feats]
+        score = F.greatest(*zs) if len(zs) > 1 else zs[0]
+    grade = F.round(_grade(score, det.anomaly_threshold), 6)
+    if det.suppression_rules:
+        # ignore_anomaly: a matching rule forces the grade to 0 (the
+        # anomaly is reported as non-anomalous, like the reference)
+        grade = F.when(_rule_suppressed(det, feats),
+                       F.lit(0.0)).otherwise(grade)
+    conf = F.least(F.lit(1.0),
+                   F.col("_cnt") / F.lit(float(det.confidence_ramp)))
+    result = (out
+              .withColumn("anomaly_score", F.round(score, 6))
+              .withColumn("anomaly_grade", grade)
+              .withColumn("confidence", F.round(conf, 6))
+              .withColumn("detector_id", F.lit(det.detector_id))
+              .withColumn("data_start_time", F.col("bucket_start"))
+              .withColumn("data_end_time", F.timestamp_millis(
+                  _bucket_ms() + det.interval_ms)))
+    ent = list(det.category_fields)
+    if ent:
+        result = with_entity(result, {c: c for c in ent})
+    else:
+        result = result.withColumn(
+            "entity",
+            F.array().cast("array<struct<name:string,value:string>>"))
+    extra = []
+    if ring:
+        result = _attribution_ring(result, feats, det.interval_ms)
+        extra = list(RING_COLS)
+    if det.imputation_method:
+        imputed = imputed or (lambda n: F.col(f"_imp_{n}"))
+        result = result.withColumn("feature_imputed", F.array(*[
+            F.struct(F.lit(n).alias("feature_id"),
+                     F.coalesce(imputed(n), F.lit(False)).alias("imputed"))
+            for n in feats]))
+        extra.append("feature_imputed")
+    return result.select(
+        "detector_id", "entity", "data_start_time", "data_end_time",
+        *feats, "anomaly_score", "anomaly_grade", "confidence",
+        *extra, *ent, "bucket_start")
+
+
 def preview(spark: SparkSession, det: Detector,
             scorer=None) -> DataFrame:
     """Historical/preview analysis: score every closed interval
@@ -285,6 +378,12 @@ def preview(spark: SparkSession, det: Detector,
     gcols = ent or ["_g"]
     base = fm if ent else fm.withColumn("_g", F.lit("_"))
 
+    def imputed(n):
+        # imputation fills whole missing buckets (doc_count 0), so the
+        # flag is uniform across features (the reference flags per-NaN
+        # coordinate; a present bucket here never has a filled feature)
+        return F.col("doc_count") == 0
+
     if getattr(scorer, "multivariate", False):
         # JOINT scoring (the reference's model shape): one model per
         # entity over the feature VECTOR — the scorer sees the
@@ -294,7 +393,6 @@ def preview(spark: SparkSession, det: Detector,
         # configure imputation for gappy entities).
         import numpy as np
         import pandas as pd
-        from pyspark.sql import types as T
 
         cond_all = None
         for n in feats:
@@ -336,36 +434,8 @@ def preview(spark: SparkSession, det: Detector,
             return out[[f.name for f in out_fields]]
 
         out = basej.groupBy(*gcols).applyInPandas(fnj, schema=out_schema)
-        from pyspark.sql.window import Window as _Wj
-
-        conf_wj = _Wj.partitionBy(*gcols).orderBy("bucket_start")
+        conf_wj = Window.partitionBy(*gcols).orderBy("bucket_start")
         out = out.withColumn("_cnt", F.count("_z").over(conf_wj))
-        score = F.abs(F.col("_z"))
-        conf = F.least(F.lit(1.0),
-                       F.col("_cnt") / F.lit(float(det.confidence_ramp)))
-        result = (out
-                  .withColumn("anomaly_score", F.round(score, 6))
-                  .withColumn("anomaly_grade",
-                              F.round(_grade(score, det.anomaly_threshold),
-                                      6))
-                  .withColumn("confidence", F.round(conf, 6))
-                  .withColumn("detector_id", F.lit(det.detector_id))
-                  .withColumn("data_start_time", F.col("bucket_start"))
-                  .withColumn("data_end_time", F.timestamp_millis(
-                      F.unix_millis(F.col("bucket_start").cast("timestamp"))
-                      + det.interval_ms)))
-        if det.suppression_rules:
-            result = result.withColumn(
-                "anomaly_grade",
-                F.when(_rule_suppressed(det, feats), F.lit(0.0))
-                .otherwise(F.col("anomaly_grade")))
-        if ent:
-            result = with_entity(result, {c: c for c in ent})
-        else:
-            result = result.withColumn(
-                "entity",
-                F.array().cast("array<struct<name:string,value:string>>"))
-        extra_cols = []
         if ret_attr:
             _check_attr_threshold(
                 getattr(scorer, "alert_threshold", None), det)
@@ -374,27 +444,18 @@ def preview(spark: SparkSession, det: Detector,
             # (_rel as NaN must be nulled BEFORE the int cast — a raw
             # cast would turn NaN into 0)
             attr_present = ~F.isnan(F.col(f"_attr_{feats[0]}"))
-            result = (result
-                      .withColumn("_attr", F.when(attr_present, F.array(
-                          *[F.col(f"_attr_{n}") for n in feats])))
-                      .withColumn("_exp", F.array(
-                          *[F.col(f"_exp_{n}") for n in feats]))
-                      .withColumn("_rel", F.when(
-                          ~F.isnan("_rel"),
-                          F.col("_rel").cast("int")))
-                      .withColumn("_past", F.when(
-                          ~F.isnan(F.col(f"_past_{feats[0]}")), F.array(
-                              *[F.col(f"_past_{n}") for n in feats]))))
-            result = _attribution_ring(result, feats, det.interval_ms)
-            extra_cols = list(RING_COLS)
-        if det.imputation_method:
-            result = result.withColumn("feature_imputed",
-                                       _feature_imputed(feats))
-            extra_cols = extra_cols + ["feature_imputed"]
-        return result.select(
-            "detector_id", "entity", "data_start_time", "data_end_time",
-            *feats, "anomaly_score", "anomaly_grade", "confidence",
-            *extra_cols, *ent, "bucket_start")
+            out = (out
+                   .withColumn("_attr", F.when(attr_present, F.array(
+                       *[F.col(f"_attr_{n}") for n in feats])))
+                   .withColumn("_exp", F.array(
+                       *[F.col(f"_exp_{n}") for n in feats]))
+                   .withColumn("_rel", F.when(
+                       ~F.isnan("_rel"), F.col("_rel").cast("int")))
+                   .withColumn("_past", F.when(
+                       ~F.isnan(F.col(f"_past_{feats[0]}")), F.array(
+                           *[F.col(f"_past_{n}") for n in feats]))))
+        return _anomaly_rows(out, det, feats, F.abs(F.col("_z")),
+                             ring=ret_attr, imputed=imputed)
     # Single-pass multi-feature scoring: melt features to rows, run ONE
     # applyInPandas over (entity, feature), pivot the scores back.  An
     # F-feature detector costs one FlatMapGroupsInPandas + one pivot
@@ -413,9 +474,7 @@ def preview(spark: SparkSession, det: Detector,
         # expose their own baseline (returns_expected) surface it
         # through the seam as ``_exp``; otherwise it is the z-score
         # stand-in's trailing-window mean (prior shingle_size points)
-        from pyspark.sql.window import Window as _W
-
-        wexp = (_W.partitionBy(*gcols, "_feat").orderBy("bucket_start")
+        wexp = (Window.partitionBy(*gcols, "_feat").orderBy("bucket_start")
                 .rowsBetween(-det.shingle_size, -1))
         melted = melted.withColumn("_exp", F.avg("_v").over(wexp))
     scored = score_entities(melted, "_v", scorer=scorer,
@@ -439,8 +498,6 @@ def preview(spark: SparkSession, det: Detector,
     # — computed BEFORE the all-features filter so it agrees exactly
     # with the per-feature scored_cnt state run_once_stateful and
     # run_historical carry (min across features there too).
-    from pyspark.sql.window import Window
-
     conf_w = Window.partitionBy(*gcols).orderBy("bucket_start")
     cum = [F.count(F.col(f"_z_{n}")).over(conf_w) for n in feats]
     out = out.withColumn("_cnt", F.least(*cum) if len(cum) > 1 else cum[0])
@@ -448,42 +505,7 @@ def preview(spark: SparkSession, det: Detector,
         # a bucket survives only if every feature scored (identical to
         # the previous per-feature inner joins)
         out = out.filter(F.col(f"_z_{n}").isNotNull())
-    score = F.greatest(*[F.abs(F.col(f"_z_{n}")) for n in feats]) \
-        if len(feats) > 1 else F.abs(F.col(f"_z_{feats[0]}"))
-    conf = F.least(F.lit(1.0),
-                   F.col("_cnt") / F.lit(float(det.confidence_ramp)))
-    result = (out
-              .withColumn("anomaly_score", F.round(score, 6))
-              .withColumn("anomaly_grade",
-                          F.round(_grade(score, det.anomaly_threshold), 6))
-              .withColumn("confidence", F.round(conf, 6))
-              .withColumn("detector_id", F.lit(det.detector_id))
-              .withColumn("data_start_time", F.col("bucket_start"))
-              .withColumn("data_end_time", F.timestamp_millis(
-                  F.unix_millis(F.col("bucket_start").cast("timestamp"))
-                  + det.interval_ms)))
-    if det.suppression_rules:
-        # ignore_anomaly: a matching rule forces the grade to 0 (the
-        # anomaly is reported as non-anomalous, like the reference)
-        result = result.withColumn(
-            "anomaly_grade",
-            F.when(_rule_suppressed(det, feats), F.lit(0.0))
-            .otherwise(F.col("anomaly_grade")))
-    if ent:
-        result = with_entity(result, {c: c for c in ent})
-    else:
-        result = result.withColumn(
-            "entity",
-            F.array().cast("array<struct<name:string,value:string>>"))
-    imp_cols = []
-    if det.imputation_method:
-        result = result.withColumn("feature_imputed",
-                                   _feature_imputed(feats))
-        imp_cols = ["feature_imputed"]
-    return result.select(
-        "detector_id", "entity", "data_start_time", "data_end_time",
-        *feats, "anomaly_score", "anomaly_grade", "confidence",
-        *imp_cols, *ent, "bucket_start")
+    return _anomaly_rows(out, det, feats, imputed=imputed)
 
 
 def run_once(spark: SparkSession, det: Detector, now_ms: int,
@@ -493,15 +515,13 @@ def run_once(spark: SparkSession, det: Detector, now_ms: int,
     the trailing ``history_intervals`` for context."""
     end = ((now_ms - det.window_delay_ms) // det.interval_ms) * det.interval_ms
     start = end - det.interval_ms
-    hist_start = end - history_intervals * det.interval_ms
-    base = {"range": {det.time_field: {"gte": hist_start, "lt": end}}}
-    q = ({"bool": {"filter": [base, det.filter_query]}}
-         if det.filter_query else base)
     scoped = Detector(
         detector_id=det.detector_id, indices=det.indices,
         feature_specs=det.feature_specs, time_field=det.time_field,
         interval_ms=det.interval_ms, window_delay_ms=det.window_delay_ms,
-        filter_query=q, category_fields=det.category_fields,
+        filter_query=_window_query(
+            det, end - history_intervals * det.interval_ms, end),
+        category_fields=det.category_fields,
         shingle_size=det.shingle_size, confidence_ramp=det.confidence_ramp)
     res = preview(spark, scoped, scorer=scorer)
     return res.filter(F.unix_millis(F.col("bucket_start").cast("timestamp"))
@@ -515,17 +535,483 @@ def run_once(spark: SparkSession, det: Detector, now_ms: int,
 # anomaly-checkpoint.json mapping is the one dynamic:true index) so a
 # realtime pass reads ONE interval of raw data plus its checkpoint.
 # The Spark analog: a parquet state table per detector holding, per
-# (entity, feature), the trailing shingle window and the count of
-# scored intervals.  run_once_stateful scans only [start, end) of the
-# source, scores the new point against the checkpointed window, and
-# rewrites the state (tmp-dir + swap, same crash posture as
-# delete_by_query; on a real cluster this is an Iceberg MERGE INTO).
+# model key, the model (trailing shingle window or serialized stream)
+# and the count of scored intervals.  A realtime pass scans only
+# [start, end) of the source, scores the new point against the
+# checkpointed model, and rewrites the state (tmp-dir + swap, same
+# crash posture as delete_by_query; on a real cluster this is an
+# Iceberg MERGE INTO).  Both model keys — (entity, feature) scalar
+# models and one joint model per entity — run through _run_stateful;
+# a _Layout holds what differs between them.
 
 
 def _state_path(state_dir: str, detector_id: str) -> str:
-    import os
-
     return os.path.join(state_dir, detector_id)
+
+
+def _state_paths(state_dir: str, detector_id: str) -> tuple[str, str]:
+    """(scalar, joint) state dirs of a detector — kept apart so the two
+    stateful modes never read each other's schema."""
+    return (_state_path(state_dir, detector_id),
+            _state_path(state_dir, f"{detector_id}__joint"))
+
+
+def _read_state(spark: SparkSession, spath: str,
+                fields: list) -> DataFrame:
+    """The state table at ``spath`` with every column of ``fields`` (a
+    table written before a column existed null-fills it), or an empty
+    one."""
+    if not os.path.exists(spath):
+        return local_df(spark, [], T.StructType(fields))
+    state = spark.read.parquet(spath)
+    for f in fields:
+        if f.name not in state.columns:
+            state = state.withColumn(f.name, F.lit(None).cast(f.dataType))
+    return state
+
+
+def _window_z(windows, v, eps: float):
+    """Trailing-z scores of ``v`` against full prior windows (one row of
+    k values each) and the expected value, the window mean — the
+    baseline preview uses for rule margins.  Same float sequence as
+    ``zscore_scorer`` (sum/k twice)."""
+    import numpy as np
+
+    W = np.asarray(windows, dtype=np.float64)
+    k = W.shape[1]
+    m = W.sum(axis=1) / k
+    m2 = (W * W).sum(axis=1) / k
+    std = np.sqrt(np.maximum(m2 - m * m, 0.0))
+    return (v - m) / (std + eps), m
+
+
+def _impute_targets(pdf, missing):
+    """Rows whose input this interval is imputed: it is ``missing``, the
+    entity produced no bucket row, and the model holds state.  A kernel
+    synthesizes the value BEFORE its replay/ingest logic, so every
+    later step (idempotent replay, cold-start skip, model update)
+    treats it exactly like an observed one, and a replay recomputes the
+    same value (zero/fixed_values are constants; 'previous' re-reads
+    the carried value, which the imputed ingest itself carried)."""
+    import numpy as np
+
+    absent = ~(pdf["_ent_present"] == True) \
+        .to_numpy(dtype=bool)                # noqa: E712 (None-safe)
+    return np.flatnonzero(missing & absent & ~np.isnan(
+        pdf["last_ms"].to_numpy(dtype=np.float64)))
+
+
+def _has(x) -> bool:
+    """A present cell: neither None nor pandas' NaN placeholder."""
+    return x is not None and not (isinstance(x, float) and x != x)
+
+
+def _scalar_kernel(det: Detector, start: int, factory, eps: float,
+                   names: list[str]):
+    """Update kernel of the scalar layout: each row is one (entity,
+    feature) model — the trailing-z window (``vals``) or a checkpointed
+    scalar stream (``model``) — scoring the interval's value ``_v``."""
+    import numpy as np
+    import pandas as pd
+
+    k, impute, interval_ms = (det.shingle_size, det.imputation_method,
+                              det.interval_ms)
+    fixed_vals = dict(det.imputation_values or {})
+
+    def fn(batches):
+        for pdf in batches:
+            n = len(pdf)
+            vals_list = [list(w) if _has(w) else [] for w in pdf["vals"]]
+            models = list(pdf["model"])
+            v = pdf["_v"].to_numpy(dtype=np.float64)
+            lm, lz, le, lv = (pdf[c].to_numpy(dtype=np.float64) for c in (
+                "last_ms", "last_z", "last_exp", "last_v"))  # NaN = never
+            imputed = np.zeros(n, dtype=bool)
+            if impute:
+                for i in _impute_targets(pdf, np.isnan(v)):
+                    if impute == "zero":
+                        v[i] = 0.0
+                    elif impute == "fixed_values":
+                        v[i] = float(fixed_vals[pdf["_feat"].iloc[i]])
+                    elif vals_list[i]:         # previous
+                        v[i] = float(vals_list[i][-1])
+                    elif not np.isnan(lv[i]):
+                        v[i] = lv[i]
+                    else:
+                        continue               # nothing to carry yet
+                    imputed[i] = True
+            havev = ~np.isnan(v)
+            # already-ingested interval → replay stored score, no append;
+            # an older interval than last_ms → no-op (out-of-order call)
+            replay = havev & (lm == float(start))
+            ingest = havev & ~replay & ~(lm > float(start))
+            z, exp = np.full(n, np.nan), np.full(n, np.nan)
+            cnt = pdf["scored_cnt"].fillna(0).to_numpy(np.int64, copy=True)
+            for i in np.flatnonzero(ingest):
+                hv = pdf["_cs_v"].iloc[i]
+                if (_has(hv) and len(hv) and not vals_list[i]
+                        and not _has(models[i])):
+                    # historical cold start: a row with no prior state
+                    # trains on the joined trailing series through the
+                    # live recurrence, so the resulting state equals a
+                    # sequential run over the same history
+                    times = np.asarray(pdf["_cs_ms"].iloc[i],
+                                       dtype=np.float64)
+                    # interpolate interior gaps between present
+                    # neighboring samples (ModelColdStart.java:346)
+                    values = np.interp(np.arange(
+                        times[0], times[-1] + interval_ms / 2,
+                        interval_ms), times, np.asarray(hv, np.float64))
+                    if factory is not None:
+                        stream = factory()
+                        for val in values:
+                            cnt[i] += not np.isnan(
+                                stream.update(float(val))[0])
+                        models[i] = stream.to_bytes()
+                    else:              # every value past the k-th scores
+                        cnt[i] += max(0, len(values) - k)
+                        vals_list[i] = [float(x) for x in values[-k:]]
+                if factory is not None:
+                    # one checkpointed streaming model per row (a row IS
+                    # one entity-feature model — the reference's
+                    # per-model checkpoint round-trip)
+                    stream = (factory.restore(bytes(models[i]))
+                              if _has(models[i]) else factory())
+                    z[i], exp[i] = stream.update(float(v[i]))
+                    models[i] = stream.to_bytes()
+            if factory is None:
+                idx = np.flatnonzero(ingest & np.array(
+                    [len(w) == k for w in vals_list], dtype=bool))
+                if len(idx):
+                    z[idx], exp[idx] = _window_z(
+                        [vals_list[i] for i in idx], v[idx], eps)
+            z[replay], exp[replay] = lz[replay], le[replay]
+            out = pdf.assign(
+                vals=[(vals_list[i] + [float(v[i])])[-k:]
+                      if ingest[i] and factory is None else vals_list[i]
+                      for i in range(n)],
+                scored_cnt=cnt + (~np.isnan(z) & ingest),
+                last_ms=pd.Series(np.where(ingest, float(start), lm))
+                .astype("Int64"),
+                last_z=np.where(ingest, z, lz),
+                last_exp=np.where(ingest, exp, le),
+                last_v=np.where(ingest, v, lv), model=models,
+                _z=z, _exp=exp, _vu=np.where(havev, v, np.nan),
+                _imp=imputed)
+            yield out[names]
+
+    return fn
+
+
+def _joint_kernel(det: Detector, start: int, factory, eps: float,
+                  names: list[str]):
+    """Update kernel of the joint layout: each row is one entity's
+    checkpointed multivariate stream (``model``) scoring the interval's
+    feature vector ``_vec``; ``last_out`` pickles the last ingest's
+    outputs for replays."""
+    import pickle
+
+    import numpy as np
+    import pandas as pd
+
+    feats = sorted(det.feature_specs)
+    nf, impute = len(feats), det.imputation_method
+    fixed_vec = ([float(det.imputation_values[f]) for f in feats]
+                 if impute == "fixed_values" else None)
+
+    def point(vec):
+        # an F=1 stream takes a scalar (RCFStream.update's univariate
+        # spelling), F>1 the vector
+        return float(vec[0]) if nf == 1 else [float(x) for x in vec]
+
+    def fn(batches):
+        for pdf in batches:
+            n = len(pdf)
+            outs = [dict(z=np.nan, exp=None, attr=None, rel=None,
+                         past=None)] * n
+            models = list(pdf["model"])
+            louts = list(pdf["last_out"])
+            lvecs = list(pdf["last_vec"])
+            lm = pdf["last_ms"].to_numpy(dtype=np.float64)
+            vecs = list(pdf["_vec"])
+            cnt = pdf["scored_cnt"].fillna(0).to_numpy(np.int64, copy=True)
+            imputed = np.zeros(n, dtype=bool)
+            if impute:
+                missing = np.array([not _has(x) for x in vecs], dtype=bool)
+                for i in _impute_targets(pdf, missing):
+                    if impute == "zero":
+                        vecs[i] = [0.0] * nf
+                    elif impute == "fixed_values":
+                        vecs[i] = list(fixed_vec)
+                    elif _has(lvecs[i]):         # previous
+                        vecs[i] = [float(x) for x in lvecs[i]]
+                    else:
+                        continue                 # nothing to carry yet
+                    imputed[i] = True
+
+            for i in range(n):
+                # no vector, or an out-of-order call: nothing to score
+                if not _has(vecs[i]) or lm[i] > float(start):
+                    continue
+                if lm[i] == float(start):            # replay, no ingest
+                    if _has(louts[i]):
+                        outs[i] = pickle.loads(bytes(louts[i]))
+                    continue
+                cvs = pdf["_cs_vecs"].iloc[i]
+                if (not _has(models[i]) and _has(cvs) and len(cvs)
+                        and np.isnan(lm[i])):
+                    # historical cold start: train the fresh joint
+                    # model on the trailing complete-feature buckets
+                    # through the live recurrence
+                    stream = factory()
+                    for hv in cvs:
+                        cnt[i] += not np.isnan(stream.update(point(hv))[0])
+                    models[i] = stream.to_bytes()
+                stream = (factory.restore(bytes(models[i]))
+                          if _has(models[i]) else factory())
+                zi, ei = stream.update(point(vecs[i]))
+                cnt[i] += zi == zi                    # scored (warm)
+                outs[i] = dict(
+                    z=zi, exp=(([float(x) for x in ei] if nf > 1
+                                else [float(ei)]) if zi == zi else None),
+                    attr=stream.last_attribution,
+                    rel=stream.last_relative_index,
+                    past=stream.last_past_values)
+                models[i] = stream.to_bytes()
+                louts[i] = pickle.dumps(outs[i])
+                lvecs[i] = [float(x) for x in vecs[i]]
+                lm[i] = float(start)
+            out = pdf.assign(
+                scored_cnt=cnt, last_ms=pd.Series(lm).astype("Int64"),
+                model=models, last_out=louts,
+                last_vec=[lv if _has(lv) else None for lv in lvecs],
+                _vu=[[float(x) for x in v] if _has(v) else None
+                     for v in vecs],
+                _imp=imputed, _rel=pd.array([o["rel"] for o in outs],
+                                            dtype="Int32"),
+                **{f"_{c}": [o[c] for o in outs]
+                   for c in ("z", "exp", "attr", "past")})
+            yield out[names]
+
+    return fn
+
+
+def _scalar_history(hist: DataFrame, gcols: list[str],
+                    feats: list[str]) -> DataFrame:
+    """Cold-start series per (entity, feature): its present trailing
+    samples in time order (``_cs_ms``/``_cs_v``); the kernel
+    interpolates interior gaps."""
+    return (_scalar_melt(hist, gcols, feats, _bucket_ms().alias("_bms"))
+            .filter(F.col("_v").isNotNull())
+            .groupBy(*gcols, "_feat")
+            .agg(F.array_sort(F.collect_list(F.struct("_bms", "_v")))
+                 .alias("_p"))
+            .select(*gcols, "_feat", F.col("_p._bms").alias("_cs_ms"),
+                    F.col("_p._v").alias("_cs_v")))
+
+
+def _joint_history(hist: DataFrame, gcols: list[str],
+                   feats: list[str]) -> DataFrame:
+    """Cold-start series per entity: its trailing complete-feature
+    vectors in time order (``_cs_vecs``) — incomplete buckets are
+    skipped, as they are live."""
+    return (_joint_melt(hist, gcols, feats, _bucket_ms().alias("_bms"))
+            .groupBy(*gcols)
+            .agg(F.array_sort(F.collect_list(F.struct("_bms", "_vec")))
+                 .alias("_p"))
+            .select(*gcols, F.col("_p._vec").alias("_cs_vecs")))
+
+
+def _scalar_wide(scored: DataFrame, base: DataFrame, keys: list[str],
+                 feats: list[str], det: Detector) -> DataFrame:
+    """Scored (entity, feature) update rows → one row per ``keys``
+    carrying ``_z_<f>``, ``_exp_<f>`` (rule margins) and ``_cnt``, the
+    min of ``scored_cnt`` across features (preview's definition of scored
+    history: a feature that missed an interval holds the entity back).
+    Under imputation the feature values and ``_imp_<f>`` flags come
+    from the update rows — an imputed bucket has no ``base`` row.  A
+    key survives only if every feature scored."""
+    impute = det.imputation_method
+    aggs = {"z": "_z", "cnt": "scored_cnt"}
+    if det.suppression_rules:
+        aggs["exp"] = "_exp"
+    if impute:
+        aggs.update(v="_vu", imp="_imp")
+    wide = (scored.groupBy(*keys).pivot("_feat", feats)
+            .agg(*[F.first(c).alias(a) for a, c in aggs.items()]))
+    named = {"z": "_z_{}", "exp": "_exp_{}", "v": "{}", "imp": "_imp_{}"}
+    cnts = [F.col(f"{n}_cnt") for n in feats]
+    wide = wide.select(
+        *keys, *[F.col(f"{n}_{a}").alias(named[a].format(n))
+                 for a in aggs if a != "cnt" for n in feats],
+        (F.least(*cnts) if len(cnts) > 1 else cnts[0]).alias("_cnt"))
+    out = wide if impute else base.join(wide, keys)
+    for n in feats:
+        out = out.filter(F.col(f"_z_{n}").isNotNull())
+    return out
+
+
+def _joint_wide(scored: DataFrame, base: DataFrame, gcols: list[str],
+                feats: list[str], det: Detector) -> DataFrame:
+    """Scored joint update rows → result-ready wide rows (feature
+    values from ``base``, or under imputation from the vector the
+    model ingested — an imputed entity has no ``base`` row)."""
+    cols = [*gcols, F.col("scored_cnt").alias("_cnt"), "_z", "_exp",
+            "_attr", "_rel", "_past"]
+    if det.imputation_method:
+        out = scored.select(*cols, "_imp", *[
+            F.element_at("_vu", j + 1).alias(n)
+            for j, n in enumerate(feats)])
+    else:
+        out = base.join(scored.select(*cols), gcols)
+    if det.suppression_rules:
+        out = out.select("*", *[F.element_at("_exp", j + 1)
+                                .alias(f"_exp_{n}")
+                                for j, n in enumerate(feats)])
+    return out
+
+
+@dataclass(frozen=True)
+class _Layout:
+    """What differs between the two realtime state layouts; everything
+    else is :func:`_run_stateful`."""
+    joint: bool             # joint state dir; ring + its threshold check
+    key: tuple              # model key past the entity columns
+    melt: Callable          # (base, gcols, feats) → input rows
+    state: tuple            # state columns past the key
+    outputs: tuple          # per-row kernel outputs
+    kernel: Callable        # (det, start, factory, eps, names) → fn
+    history: Callable       # (trailing base, gcols, feats) → series
+    history_cols: tuple     # the series columns
+    widen: Callable         # (scored, base, gcols, feats, det) → rows
+    # _ent_present source: the pre-filter bucket rows (joint: a partial
+    # bucket is present-but-skipped, like preview's joint path over an
+    # imputed grid) or the post-cache input rows (scalar)
+    presence_from_base: bool
+    linear_hint: str        # tail of the linear-imputation error
+
+
+def _fields(**types) -> tuple:
+    return tuple(T.StructField(n, t) for n, t in types.items())
+
+
+_DOUBLES = T.ArrayType(T.DoubleType())
+
+_SCALAR = _Layout(
+    joint=False, key=("_feat",), melt=_scalar_melt,
+    state=_fields(vals=_DOUBLES, scored_cnt=T.LongType(),
+                  last_ms=T.LongType(), last_z=T.DoubleType(),
+                  model=T.BinaryType(), last_v=T.DoubleType(),
+                  last_exp=T.DoubleType()),
+    outputs=_fields(_z=T.DoubleType(), _exp=T.DoubleType(),
+                    _vu=T.DoubleType(), _imp=T.BooleanType()),
+    kernel=_scalar_kernel, history=_scalar_history,
+    history_cols=_fields(_cs_ms=T.ArrayType(T.LongType()), _cs_v=_DOUBLES),
+    widen=_scalar_wide,
+    presence_from_base=False,
+    linear_hint=", or preview/run_historical for linear series")
+
+_JOINT = _Layout(
+    joint=True, key=(), melt=_joint_melt,
+    state=_fields(scored_cnt=T.LongType(), last_ms=T.LongType(),
+                  model=T.BinaryType(), last_out=T.BinaryType(),
+                  last_vec=_DOUBLES),
+    outputs=_fields(_z=T.DoubleType(), _exp=_DOUBLES, _attr=_DOUBLES,
+                    _rel=T.IntegerType(), _past=_DOUBLES, _vu=_DOUBLES,
+                    _imp=T.BooleanType()),
+    kernel=_joint_kernel, history=_joint_history,
+    history_cols=_fields(_cs_vecs=T.ArrayType(_DOUBLES)),
+    widen=_joint_wide, presence_from_base=True, linear_hint="")
+
+
+def _run_stateful(spark: SparkSession, det: Detector, now_ms: int,
+                  state_dir: str, layout: _Layout, factory, cache_policy,
+                  cold_start_history: int | None,
+                  eps: float = 1e-9) -> DataFrame:
+    """One realtime interval through a checkpointed state table: the
+    round-trip both public runners share (the reference has one
+    ``CheckpointDao`` path for every model shape).  See
+    :func:`run_once_stateful` / :func:`run_once_stateful_joint` for
+    the contract."""
+    if det.imputation_method == "linear":
+        raise NotImplementedError(
+            "linear imputation interpolates toward the NEXT sample, "
+            "which a single realtime interval cannot observe — use "
+            "zero/fixed_values/previous here" + layout.linear_hint)
+    _check_fixed_values(det)
+    if layout.joint:
+        _check_attr_threshold(getattr(factory, "alert_threshold", None),
+                              det)
+    end = ((now_ms - det.window_delay_ms) // det.interval_ms) * det.interval_ms
+    start = end - det.interval_ms
+    ent = list(det.category_fields)
+    gcols = ent or ["_g"]
+    keys = [*gcols, *layout.key]
+    feats = sorted(det.feature_specs)
+
+    src = load_table(spark, det.indices)
+    base = _window_matrix(src, det, start, end)
+    cur = layout.melt(base, gcols, feats)
+    spath = _state_paths(state_dir, det.detector_id)[layout.joint]
+    state_fields = [*(cur.schema[c] for c in keys), *layout.state]
+    state = _read_state(spark, spath, state_fields)
+
+    if cache_policy is not None:
+        from .caching import admit_entities
+
+        hot, _cold, evicted = admit_entities(
+            spark, state_dir, det.detector_id,
+            cur.select(*gcols).distinct(), state.select(*gcols).distinct(),
+            cache_policy, now_ms, det.interval_ms)
+        # evicted models drop (cold-start on re-admission); cold and
+        # doorkeeper-skipped entities contribute nothing this interval
+        state = state.join(evicted, gcols, "left_anti")
+        cur = cur.join(hot, gcols, "left_semi")
+
+    joined = state.join(cur, keys, "full_outer")
+    if det.imputation_method:
+        # impute only for entities with NO bucket row this interval
+        # (preview's impute_fill fills MISSING buckets; a present
+        # bucket whose feature aggregated to null stays null there too)
+        present = base if layout.presence_from_base else cur
+        joined = joined.join(
+            present.select(*gcols).distinct()
+            .withColumn("_ent_present", F.lit(True)),
+            gcols, "left_outer")
+    else:
+        joined = joined.withColumn("_ent_present",
+                                   F.lit(None).cast("boolean"))
+    if cold_start_history:
+        # selectNumberOfSamples: at least numMinSamples (32)
+        n_train = max(32, int(cold_start_history))
+        new_keys = (cur.select(*keys).distinct()
+                    .join(state.select(*keys).distinct(), keys, "left_anti"))
+        new_ents = new_keys.select(*ent).distinct() if layout.key \
+            else new_keys
+        src_new = (src.join(F.broadcast(new_ents), ent, "left_semi")
+                   if ent else src)
+        hist = _window_matrix(src_new, det,
+                              start - n_train * det.interval_ms, start)
+        series = layout.history(hist, gcols, feats)
+        joined = joined.join(series.join(new_keys, keys, "left_semi"),
+                             keys, "left_outer")
+    else:
+        for f in layout.history_cols:
+            joined = joined.withColumn(f.name, F.lit(None).cast(f.dataType))
+
+    upd_schema = T.StructType([*state_fields, *layout.outputs])
+    kernel = layout.kernel(det, start, factory, eps, upd_schema.fieldNames())
+    # truncate lineage before swapping the state dir the plan reads from
+    upd = joined.mapInPandas(kernel, schema=upd_schema).localCheckpoint()
+    _swap_state_dir(upd, spath, [f.name for f in state_fields])
+
+    rows = (layout.widen(upd.filter(F.col("_z").isNotNull()), base, gcols,
+                         feats, det)
+            .withColumn("bucket_start", F.timestamp_millis(F.lit(start))))
+    if layout.joint:
+        return _anomaly_rows(rows, det, feats, F.abs(F.col("_z")),
+                             ring=True, imputed=lambda n: F.col("_imp"))
+    return _anomaly_rows(rows, det, feats)
 
 
 def run_once_stateful(spark: SparkSession, det: Detector, now_ms: int,
@@ -593,332 +1079,9 @@ def run_once_stateful(spark: SparkSession, det: Detector, now_ms: int,
     semi-join before aggregation (at steady state new entities per
     interval are few).
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from .features import feature_matrix
-
-    impute = det.imputation_method
-    if impute == "linear":
-        raise NotImplementedError(
-            "linear imputation interpolates toward the NEXT sample, "
-            "which a single realtime interval cannot observe — use "
-            "zero/fixed_values/previous here, or preview/"
-            "run_historical for linear series")
-    if impute == "fixed_values":
-        missing = [f for f in det.feature_specs
-                   if f not in (det.imputation_values or {})]
-        if missing:
-            raise ValueError(
-                f"fixed_values imputation needs a value per feature; "
-                f"missing {missing}")
-    k = det.shingle_size
-    end = ((now_ms - det.window_delay_ms) // det.interval_ms) * det.interval_ms
-    start = end - det.interval_ms
-    ent = list(det.category_fields)
-    gcols = ent or ["_g"]
-    feats = sorted(det.feature_specs)
-
-    rng = {"range": {det.time_field: {"gte": start, "lt": end}}}
-    q = ({"bool": {"filter": [rng, det.filter_query]}}
-         if det.filter_query else rng)
-    src = load_table(spark, det.indices)
-    fm = feature_matrix(src, det.time_field, det.interval_ms,
-                        det.feature_specs,
-                        entity_cols=tuple(det.category_fields),
-                        filter_cond=compile_filter(src, q))
-    base = fm if ent else fm.withColumn("_g", F.lit("_"))
-    pairs = ", ".join(f"'{n}', cast(`{n}` as double)" for n in feats)
-    cur = base.select(
-        *gcols,
-        F.expr(f"stack({len(feats)}, {pairs})").alias("_feat", "_v"))
-
-    spath = _state_path(state_dir, det.detector_id)
-    state_fields = ([f for f in cur.schema.fields if f.name != "_v"]
-                    + [T.StructField("vals", T.ArrayType(T.DoubleType())),
-                       T.StructField("scored_cnt", T.LongType()),
-                       T.StructField("last_ms", T.LongType()),
-                       T.StructField("last_z", T.DoubleType()),
-                       T.StructField("model", T.BinaryType()),
-                       T.StructField("last_v", T.DoubleType())])
-    state_schema = T.StructType(state_fields)
-    import os
-
-    if os.path.exists(spath):
-        state = spark.read.parquet(spath)
-        # state written before the idempotency / model / imputation
-        # columns existed
-        for c, t in (("last_ms", "long"), ("last_z", "double"),
-                     ("model", "binary"), ("last_v", "double")):
-            if c not in state.columns:
-                state = state.withColumn(c, F.lit(None).cast(t))
-    else:
-        state = local_df(spark, [], state_schema)
-
-    if cache_policy is not None:
-        from .caching import admit_entities
-
-        present = cur.select(*gcols).distinct()
-        hosted = state.select(*gcols).distinct()
-        hot, _cold, evicted = admit_entities(
-            spark, state_dir, det.detector_id, present, hosted,
-            cache_policy, now_ms, det.interval_ms)
-        # evicted models drop (cold-start on re-admission); cold and
-        # doorkeeper-skipped entities contribute nothing this interval
-        state = state.join(evicted, gcols, "left_anti")
-        cur = cur.join(hot, gcols, "left_semi")
-
-    joined = state.join(cur, [*gcols, "_feat"], "full_outer")
-    if impute:
-        # impute only for entities with NO bucket row this interval
-        # (preview's impute_fill fills MISSING buckets; a present
-        # bucket whose feature aggregated to null stays null there
-        # too) — flag entity presence before the per-feature melt
-        joined = joined.join(
-            cur.select(*gcols).distinct()
-            .withColumn("_ent_present", F.lit(True)),
-            gcols, "left_outer")
-    else:
-        joined = joined.withColumn("_ent_present", F.lit(None)
-                                   .cast("boolean"))
-    if cold_start_history:
-        # selectNumberOfSamples: at least numMinSamples (32)
-        n_train = max(32, int(cold_start_history))
-        new_keys = (cur.select(*gcols, "_feat").distinct()
-                    .join(state.select(*gcols, "_feat").distinct(),
-                          [*gcols, "_feat"], "left_anti"))
-        src_new = (src.join(F.broadcast(new_keys.select(*ent).distinct()),
-                            ent, "left_semi") if ent else src)
-        rng_h = {"range": {det.time_field: {
-            "gte": start - n_train * det.interval_ms, "lt": start}}}
-        qh = ({"bool": {"filter": [rng_h, det.filter_query]}}
-              if det.filter_query else rng_h)
-        fmh = feature_matrix(src_new, det.time_field, det.interval_ms,
-                             det.feature_specs,
-                             entity_cols=tuple(det.category_fields),
-                             filter_cond=compile_filter(src_new, qh))
-        bh = fmh if ent else fmh.withColumn("_g", F.lit("_"))
-        cs = (bh.select(
-                  *gcols,
-                  F.unix_millis(F.col("bucket_start").cast("timestamp"))
-                  .alias("_bms"),
-                  F.expr(f"stack({len(feats)}, {pairs})")
-                  .alias("_feat", "_hv"))
-              .filter(F.col("_hv").isNotNull())
-              .groupBy(*gcols, "_feat")
-              .agg(F.array_sort(F.collect_list(F.struct("_bms", "_hv")))
-                   .alias("_p"))
-              .select(*gcols, "_feat",
-                      F.col("_p._bms").alias("_cs_ms"),
-                      F.col("_p._hv").alias("_cs_v"))
-              .join(new_keys, [*gcols, "_feat"], "left_semi"))
-        joined = joined.join(cs, [*gcols, "_feat"], "left_outer")
-    else:
-        joined = (joined
-                  .withColumn("_cs_ms", F.lit(None).cast("array<long>"))
-                  .withColumn("_cs_v", F.lit(None).cast("array<double>")))
-    interval_ms = det.interval_ms
-    fixed_vals = dict(det.imputation_values or {})
-    upd_schema = T.StructType(list(state_fields)
-                              + [T.StructField("_z", T.DoubleType()),
-                                 T.StructField("_vu", T.DoubleType()),
-                                 T.StructField("_imp", T.BooleanType())])
-
-    def fn(batches):
-        for pdf in batches:
-            n = len(pdf)
-            vals_list = [list(v) if v is not None and not (
-                isinstance(v, float) and pd.isna(v)) else []
-                for v in pdf["vals"]]
-            lens = np.fromiter((len(v) for v in vals_list), np.int64, n)
-            v = pdf["_v"].to_numpy(dtype=np.float64)
-            havev = ~np.isnan(v)
-            lm = pdf["last_ms"].to_numpy(dtype=np.float64)  # NaN = never
-            lz = pdf["last_z"].to_numpy(dtype=np.float64)
-            lv = pdf["last_v"].to_numpy(dtype=np.float64)
-            imputed = np.zeros(n, dtype=bool)
-            if impute:
-                # synthesize the missing value BEFORE the replay/
-                # ingest masks so every downstream step (idempotent
-                # replay, cold-start skip, window append, model
-                # update) treats it exactly like an observed one —
-                # replays recompute the same value deterministically
-                # (zero/fixed are constants; 'previous' re-reads the
-                # carried value)
-                ent_absent = ~(pdf["_ent_present"] == True) \
-                    .to_numpy(dtype=bool)      # noqa: E712 (None-safe)
-                has_state = ~np.isnan(lm)
-                cand = ~havev & ent_absent & has_state
-                for i in np.flatnonzero(cand):
-                    if impute == "zero":
-                        v[i] = 0.0
-                    elif impute == "fixed_values":
-                        v[i] = float(fixed_vals[pdf["_feat"].iloc[i]])
-                    else:                      # previous
-                        if vals_list[i]:
-                            v[i] = float(vals_list[i][-1])
-                        elif not np.isnan(lv[i]):
-                            v[i] = lv[i]
-                        else:
-                            continue           # nothing to carry yet
-                    imputed[i] = True
-                havev = ~np.isnan(v)
-            # already-ingested interval → replay stored score, no append;
-            # an older interval than last_ms → no-op (out-of-order call)
-            replay = havev & (lm == float(start))
-            ingest = havev & ~replay & ~(lm > float(start))
-            z = np.full(n, np.nan)
-            models = list(pdf["model"]) if "model" in pdf.columns \
-                else [None] * n
-            extra_cnt = np.zeros(n, dtype=np.int64)
-            # historical cold start: rows with no prior state train on
-            # the joined trailing series before the live update below
-            # runs (the recurrence is the live one, so the resulting
-            # state equals a sequential run over the same history)
-            for i in range(n):
-                hv = pdf["_cs_v"].iloc[i]
-                if (hv is None or (isinstance(hv, float) and pd.isna(hv))
-                        or len(hv) == 0 or not ingest[i]
-                        or lens[i] > 0 or not (
-                            models[i] is None
-                            or (isinstance(models[i], float)
-                                and pd.isna(models[i])))):
-                    continue
-                times = np.asarray(pdf["_cs_ms"].iloc[i], dtype=np.float64)
-                values = np.asarray(hv, dtype=np.float64)
-                if len(times) > 1:
-                    # interpolate interior gaps between present
-                    # neighboring samples (ModelColdStart.java:346)
-                    grid = np.arange(times[0],
-                                     times[-1] + interval_ms / 2,
-                                     interval_ms)
-                    values = np.interp(grid, times, values)
-                if scorer_factory is not None:
-                    stream = scorer_factory()
-                    for val in values:
-                        zt, _ = stream.update(float(val))
-                        if not np.isnan(zt):
-                            extra_cnt[i] += 1
-                    models[i] = stream.to_bytes()
-                else:
-                    w: list = []
-                    for val in values:
-                        if len(w) == k:
-                            extra_cnt[i] += 1
-                        w = (w + [float(val)])[-k:]
-                    vals_list[i] = w
-                    lens[i] = len(w)
-            if scorer_factory is not None:
-                # one checkpointed streaming model per row (a row IS one
-                # entity-feature model — the per-entity loop mirrors the
-                # reference's per-model checkpoint round-trip)
-                for i in np.flatnonzero(ingest):
-                    mb = models[i]
-                    stream = (scorer_factory() if mb is None or (
-                        isinstance(mb, float) and pd.isna(mb))
-                        else scorer_factory.restore(bytes(mb)))
-                    zi, _ = stream.update(float(v[i]))
-                    z[i] = zi
-                    models[i] = stream.to_bytes()
-            else:
-                idx = np.flatnonzero((lens == k) & ingest)
-                if len(idx):
-                    # same float sequence as zscore_scorer (sum/k twice)
-                    W = np.array([vals_list[i] for i in idx],
-                                 dtype=np.float64)
-                    m = W.sum(axis=1) / k
-                    m2 = (W * W).sum(axis=1) / k
-                    std = np.sqrt(np.maximum(m2 - m * m, 0.0))
-                    z[idx] = (v[idx] - m) / (std + eps)
-            z[replay] = lz[replay]
-            newvals = [
-                (vals_list[i] + [float(v[i])])[-k:]
-                if ingest[i] and scorer_factory is None
-                else vals_list[i]
-                for i in range(n)]
-            cnt = pdf["scored_cnt"].fillna(0).to_numpy(dtype=np.int64)
-            cnt = cnt + extra_cnt \
-                + ((~np.isnan(z)) & ingest).astype(np.int64)
-            new_lm = np.where(ingest, float(start), lm)
-            new_lz = np.where(ingest, z, lz)
-            new_lv = np.where(ingest, v, lv)
-            out = pdf.drop(columns=["vals", "scored_cnt", "last_ms",
-                                    "last_z", "last_v", "_v", "model",
-                                    "_cs_ms", "_cs_v", "_ent_present"],
-                           errors="ignore").copy()
-            out["vals"] = newvals
-            out["scored_cnt"] = cnt
-            out["last_ms"] = pd.Series(new_lm).astype("Int64")
-            out["last_z"] = new_lz
-            out["model"] = models
-            out["last_v"] = new_lv
-            out["_z"] = z
-            out["_vu"] = np.where(havev, v, np.nan)
-            out["_imp"] = imputed
-            yield out[[f.name for f in upd_schema.fields]]
-
-    upd = joined.mapInPandas(fn, schema=upd_schema)
-    # truncate lineage before swapping the state dir the plan reads from
-    upd = upd.localCheckpoint()
-    _swap_state_dir(upd, spath, [f.name for f in state_fields])
-
-    scored = upd.filter(F.col("_z").isNotNull())
-    zw = (scored.groupBy(*gcols)
-          .pivot("_feat", feats).agg(F.first("_z")))
-    for n in feats:
-        zw = zw.withColumnRenamed(n, f"_z_{n}")
-    # min across features = the preview definition of scored history
-    # (a feature that missed an interval holds the entity's count back)
-    cnt1 = (scored.groupBy(*gcols)
-            .agg(F.min("scored_cnt").alias("_cnt")))
-    if impute:
-        # feature values come from the update rows — an imputed
-        # entity has NO base row this interval, so base can't source
-        # them; the _imp flags feed the feature_imputed result field
-        vw = (scored.groupBy(*gcols)
-              .pivot("_feat", feats)
-              .agg(F.first("_vu").alias("v"),
-                   F.first("_imp").alias("imp")))
-        for n in feats:
-            vw = (vw.withColumnRenamed(f"{n}_v", n)
-                  .withColumnRenamed(f"{n}_imp", f"_imp_{n}"))
-        out = vw.join(zw, gcols).join(cnt1, gcols)
-    else:
-        out = base.join(zw, gcols).join(cnt1, gcols)
-    for n in feats:
-        out = out.filter(F.col(f"_z_{n}").isNotNull())
-    score = F.greatest(*[F.abs(F.col(f"_z_{n}")) for n in feats]) \
-        if len(feats) > 1 else F.abs(F.col(f"_z_{feats[0]}"))
-    conf = F.least(F.lit(1.0),
-                   F.col("_cnt") / F.lit(float(det.confidence_ramp)))
-    result = (out
-              .withColumn("anomaly_score", F.round(score, 6))
-              .withColumn("anomaly_grade",
-                          F.round(_grade(score, det.anomaly_threshold), 6))
-              .withColumn("confidence", F.round(conf, 6))
-              .withColumn("detector_id", F.lit(det.detector_id))
-              .withColumn("bucket_start", F.timestamp_millis(F.lit(start)))
-              .withColumn("data_start_time", F.col("bucket_start"))
-              .withColumn("data_end_time", F.timestamp_millis(F.lit(end))))
-    if ent:
-        result = with_entity(result, {c: c for c in ent})
-    else:
-        result = result.withColumn(
-            "entity",
-            F.array().cast("array<struct<name:string,value:string>>"))
-    imp_cols = []
-    if impute:
-        # same nested {feature_id, imputed} shape as the preview paths
-        result = result.withColumn("feature_imputed", F.array(*[
-            F.struct(F.lit(n).alias("feature_id"),
-                     F.coalesce(F.col(f"_imp_{n}"), F.lit(False))
-                     .alias("imputed")) for n in feats]))
-        imp_cols = ["feature_imputed"]
-    return result.select(
-        "detector_id", "entity", "data_start_time", "data_end_time",
-        *feats, "anomaly_score", "anomaly_grade", "confidence",
-        *ent, "bucket_start", *imp_cols)
+    return _run_stateful(spark, det, now_ms, state_dir, _SCALAR,
+                         scorer_factory, cache_policy, cold_start_history,
+                         eps)
 
 
 def run_once_stateful_joint(spark: SparkSession, det: Detector,
@@ -952,8 +1115,8 @@ def run_once_stateful_joint(spark: SparkSession, det: Detector,
     interval (``previous`` carries the last ingested vector via the
     ``last_vec`` state column; partial buckets stay skipped, matching
     preview's impute-then-complete-vector semantics; ``linear``
-    raises).  State lives under ``<detector_id>__joint`` so the two
-    stateful modes never read each other's schema.
+    raises).  State lives in its own table (:func:`_state_paths`) so
+    the two stateful modes never read each other's schema.
 
     ``cold_start_history`` trains a NEW entity's joint model on up to
     ``max(32, N)`` trailing complete-feature buckets ending at the
@@ -969,27 +1132,6 @@ def run_once_stateful_joint(spark: SparkSession, det: Detector,
     shared per detector across both state layouts, like the
     reference's one EntityCache per detector.
     """
-    import pickle
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from .features import feature_matrix
-
-    impute = det.imputation_method
-    if impute == "linear":
-        raise NotImplementedError(
-            "linear imputation interpolates toward the NEXT sample, "
-            "which a single realtime interval cannot observe — use "
-            "zero/fixed_values/previous here")
-    if impute == "fixed_values":
-        _missing = [f for f in det.feature_specs
-                    if f not in (det.imputation_values or {})]
-        if _missing:
-            raise ValueError(
-                f"fixed_values imputation needs a value per feature; "
-                f"missing {_missing}")
     # scorer_factory is the JobStore.tick runner-seam spelling of the
     # same argument (tick calls run(..., scorer_factory=...)) — accept
     # either name so the joint path schedules like the scalar one
@@ -999,287 +1141,8 @@ def run_once_stateful_joint(spark: SparkSession, det: Detector,
         raise ValueError("run_once_stateful_joint needs a stream/"
                          "scorer factory (e.g. rcf_stream_factory("
                          "n_features=F))")
-    _check_attr_threshold(
-        getattr(stream_factory, "alert_threshold", None), det)
-    end = ((now_ms - det.window_delay_ms) // det.interval_ms) \
-        * det.interval_ms
-    start = end - det.interval_ms
-    ent = list(det.category_fields)
-    gcols = ent or ["_g"]
-    feats = sorted(det.feature_specs)
-    nf = len(feats)
-
-    rng = {"range": {det.time_field: {"gte": start, "lt": end}}}
-    q = ({"bool": {"filter": [rng, det.filter_query]}}
-         if det.filter_query else rng)
-    src = load_table(spark, det.indices)
-    fm = feature_matrix(src, det.time_field, det.interval_ms,
-                        det.feature_specs,
-                        entity_cols=tuple(det.category_fields),
-                        filter_cond=compile_filter(src, q))
-    base = fm if ent else fm.withColumn("_g", F.lit("_"))
-    cond_all = None
-    for n in feats:
-        c = F.col(n).isNotNull()
-        cond_all = c if cond_all is None else cond_all & c
-    cur = base.filter(cond_all).select(
-        *gcols,
-        F.array(*[F.col(n).cast("double") for n in feats]).alias("_vec"))
-
-    spath = _state_path(state_dir, f"{det.detector_id}__joint")
-    import os
-
-    state_fields = ([f for f in cur.schema.fields if f.name != "_vec"]
-                    + [T.StructField("scored_cnt", T.LongType()),
-                       T.StructField("last_ms", T.LongType()),
-                       T.StructField("model", T.BinaryType()),
-                       T.StructField("last_out", T.BinaryType()),
-                       T.StructField("last_vec",
-                                     T.ArrayType(T.DoubleType()))])
-    state_schema = T.StructType(state_fields)
-    if os.path.exists(spath):
-        state = spark.read.parquet(spath)
-        if "last_vec" not in state.columns:   # pre-imputation tables
-            state = state.withColumn(
-                "last_vec", F.lit(None).cast("array<double>"))
-    else:
-        state = local_df(spark, [], state_schema)
-
-    if cache_policy is not None:
-        from .caching import admit_entities
-
-        present = cur.select(*gcols).distinct()
-        hosted = state.select(*gcols).distinct()
-        hot, _cold, evicted = admit_entities(
-            spark, state_dir, det.detector_id, present, hosted,
-            cache_policy, now_ms, det.interval_ms)
-        state = state.join(evicted, gcols, "left_anti")
-        cur = cur.join(hot, gcols, "left_semi")
-
-    joined = state.join(cur, gcols, "full_outer")
-    if impute:
-        # entity presence = a bucket ROW exists (pre-complete-vector
-        # filter): partial buckets are present-but-skipped, exactly
-        # like preview's joint path over an imputed-fill grid
-        joined = joined.join(
-            base.select(*gcols).distinct()
-            .withColumn("_ent_present", F.lit(True)),
-            gcols, "left_outer")
-    else:
-        joined = joined.withColumn("_ent_present",
-                                   F.lit(None).cast("boolean"))
-    if cold_start_history:
-        n_train = max(32, int(cold_start_history))
-        new_ent = (cur.select(*gcols).distinct()
-                   .join(state.select(*gcols).distinct(), gcols,
-                         "left_anti"))
-        src_new = (src.join(F.broadcast(new_ent), ent, "left_semi")
-                   if ent else src)
-        rng_h = {"range": {det.time_field: {
-            "gte": start - n_train * det.interval_ms, "lt": start}}}
-        qh = ({"bool": {"filter": [rng_h, det.filter_query]}}
-              if det.filter_query else rng_h)
-        fmh = feature_matrix(src_new, det.time_field, det.interval_ms,
-                             det.feature_specs,
-                             entity_cols=tuple(det.category_fields),
-                             filter_cond=compile_filter(src_new, qh))
-        bhh = fmh if ent else fmh.withColumn("_g", F.lit("_"))
-        csj = (bhh.filter(cond_all)
-               .select(*gcols,
-                       F.unix_millis(F.col("bucket_start")
-                                     .cast("timestamp")).alias("_bms"),
-                       F.array(*[F.col(nm).cast("double")
-                                 for nm in feats]).alias("_hvec"))
-               .groupBy(*gcols)
-               .agg(F.array_sort(F.collect_list(
-                   F.struct("_bms", "_hvec"))).alias("_p"))
-               .select(*gcols, F.col("_p._hvec").alias("_cs_vecs"))
-               .join(new_ent, gcols, "left_semi"))
-        joined = joined.join(csj, gcols, "left_outer")
-    else:
-        joined = joined.withColumn(
-            "_cs_vecs", F.lit(None).cast("array<array<double>>"))
-    fixed_vec = ([float((det.imputation_values or {})[f])
-                  for f in feats] if impute == "fixed_values" else None)
-    out_extra = [T.StructField("_z", T.DoubleType()),
-                 T.StructField("_exp", T.ArrayType(T.DoubleType())),
-                 T.StructField("_attr", T.ArrayType(T.DoubleType())),
-                 T.StructField("_rel", T.IntegerType()),
-                 T.StructField("_past", T.ArrayType(T.DoubleType())),
-                 T.StructField("_vu", T.ArrayType(T.DoubleType())),
-                 T.StructField("_imp", T.BooleanType())]
-    upd_schema = T.StructType(list(state_fields) + out_extra)
-
-    def fn(batches):
-        for pdf in batches:
-            n = len(pdf)
-            z = np.full(n, np.nan)
-            exps: list = [None] * n
-            attrs: list = [None] * n
-            rels: list = [None] * n
-            pasts: list = [None] * n
-            models = list(pdf["model"])
-            louts = list(pdf["last_out"])
-            lvecs = list(pdf["last_vec"])
-            lm = pdf["last_ms"].to_numpy(dtype=np.float64)
-            lm_orig = lm.copy()                  # pre-ingest snapshot
-            vecs = list(pdf["_vec"])
-            extra_cnt = np.zeros(n, dtype=np.int64)
-            imputed = np.zeros(n, dtype=bool)
-
-            def has(x):
-                return x is not None and not (isinstance(x, float)
-                                              and pd.isna(x))
-
-            if impute:
-                # synthesize the missing vector BEFORE the replay/
-                # ingest logic so it flows through the identical
-                # recurrence; replays recompute the same vector
-                # (zero/fixed constants; previous re-reads last_vec,
-                # which the imputed ingest itself carried forward)
-                ent_p = (pdf["_ent_present"] == True) \
-                    .to_numpy(dtype=bool)      # noqa: E712 (None-safe)
-                for i in range(n):
-                    if has(vecs[i]) or ent_p[i] or np.isnan(lm[i]):
-                        continue
-                    if impute == "zero":
-                        vecs[i] = [0.0] * nf
-                    elif impute == "fixed_values":
-                        vecs[i] = list(fixed_vec)
-                    elif has(lvecs[i]):          # previous
-                        vecs[i] = [float(x) for x in lvecs[i]]
-                    else:
-                        continue                 # nothing to carry yet
-                    imputed[i] = True
-
-            for i in range(n):
-                if not has(vecs[i]):
-                    continue
-                if lm[i] == float(start):            # replay, no ingest
-                    if has(louts[i]):
-                        o = pickle.loads(bytes(louts[i]))
-                        z[i] = o["z"]
-                        exps[i] = o["exp"]
-                        attrs[i] = o["attr"]
-                        rels[i] = o["rel"]
-                        pasts[i] = o["past"]
-                    continue
-                if lm[i] > float(start):             # out-of-order call
-                    continue
-                cvs = pdf["_cs_vecs"].iloc[i]
-                if (not has(models[i]) and has(cvs) and len(cvs)
-                        and np.isnan(lm_orig[i])):
-                    # historical cold start: train the fresh joint
-                    # model on the trailing complete-feature buckets
-                    # through the live recurrence
-                    cs_stream = stream_factory()
-                    for hv in cvs:
-                        zt, _ = cs_stream.update(
-                            float(hv[0]) if nf == 1
-                            else [float(x) for x in hv])
-                        if zt == zt:
-                            extra_cnt[i] += 1
-                    models[i] = cs_stream.to_bytes()
-                stream = (stream_factory() if not has(models[i])
-                          else stream_factory.restore(bytes(models[i])))
-                # an F=1 stream takes a scalar (RCFStream.update's
-                # univariate spelling), F>1 the vector
-                zi, ei = stream.update(
-                    float(vecs[i][0]) if nf == 1
-                    else [float(x) for x in vecs[i]])
-                z[i] = zi
-                if zi == zi:                          # scored (warm)
-                    exps[i] = ([float(x) for x in ei]
-                               if nf > 1 else [float(ei)])
-                attrs[i] = stream.last_attribution
-                rels[i] = stream.last_relative_index
-                pasts[i] = stream.last_past_values
-                models[i] = stream.to_bytes()
-                louts[i] = pickle.dumps(
-                    {"z": z[i], "exp": exps[i], "attr": attrs[i],
-                     "rel": rels[i], "past": pasts[i]})
-                lvecs[i] = [float(x) for x in vecs[i]]
-                lm[i] = float(start)
-            cnt = pdf["scored_cnt"].fillna(0).to_numpy(dtype=np.int64)
-            # count only fresh scores (replays already counted)
-            fresh = (~np.isnan(z)) & (np.isnan(lm_orig)
-                                      | (lm_orig != float(start)))
-            cnt = cnt + extra_cnt + fresh.astype(np.int64)
-            out = pdf.drop(columns=["_vec", "scored_cnt", "last_ms",
-                                    "model", "last_out", "last_vec",
-                                    "_cs_vecs", "_ent_present"],
-                           errors="ignore").copy()
-            out["scored_cnt"] = cnt
-            out["last_ms"] = pd.Series(lm).astype("Int64")
-            out["model"] = models
-            out["last_out"] = louts
-            out["last_vec"] = [lv if has(lv) else None for lv in lvecs]
-            out["_vu"] = [([float(x) for x in v] if has(v) else None)
-                          for v in vecs]
-            out["_imp"] = imputed
-            out["_z"] = z
-            out["_exp"] = exps
-            out["_attr"] = attrs
-            out["_rel"] = pd.array(
-                [r if r is not None else None for r in rels],
-                dtype="Int32")
-            out["_past"] = pasts
-            yield out[[f.name for f in upd_schema.fields]]
-
-    upd = joined.mapInPandas(fn, schema=upd_schema)
-    upd = upd.localCheckpoint()
-    _swap_state_dir(upd, spath, [f.name for f in state_fields])
-
-    scored = upd.filter(F.col("_z").isNotNull())
-    if impute:
-        # imputed entities have no base row — feature values come
-        # from the vector the model actually ingested
-        out = scored.select(*gcols, "scored_cnt", "_z", "_exp",
-                            "_attr", "_rel", "_past", "_vu", "_imp")
-        for j, nm in enumerate(feats):
-            out = out.withColumn(nm, F.element_at("_vu", j + 1))
-    else:
-        out = base.join(scored.select(
-            *gcols, "scored_cnt", "_z", "_exp", "_attr", "_rel",
-            "_past"), gcols)
-    score = F.abs(F.col("_z"))
-    conf = F.least(F.lit(1.0), F.col("scored_cnt")
-                   / F.lit(float(det.confidence_ramp)))
-    result = (out
-              .withColumn("anomaly_score", F.round(score, 6))
-              .withColumn("anomaly_grade",
-                          F.round(_grade(score, det.anomaly_threshold), 6))
-              .withColumn("confidence", F.round(conf, 6))
-              .withColumn("detector_id", F.lit(det.detector_id))
-              .withColumn("bucket_start", F.timestamp_millis(F.lit(start)))
-              .withColumn("data_start_time", F.col("bucket_start"))
-              .withColumn("data_end_time", F.timestamp_millis(F.lit(end))))
-    if det.suppression_rules:
-        for j, n in enumerate(feats):
-            result = result.withColumn(f"_exp_{n}",
-                                       F.element_at("_exp", j + 1))
-        result = result.withColumn(
-            "anomaly_grade",
-            F.when(_rule_suppressed(det, feats), F.lit(0.0))
-            .otherwise(F.col("anomaly_grade")))
-    if ent:
-        result = with_entity(result, {c: c for c in ent})
-    else:
-        result = result.withColumn(
-            "entity",
-            F.array().cast("array<struct<name:string,value:string>>"))
-    result = _attribution_ring(result, feats, det.interval_ms)
-    imp_cols = []
-    if impute:
-        result = result.withColumn("feature_imputed", F.array(*[
-            F.struct(F.lit(nm).alias("feature_id"),
-                     F.coalesce(F.col("_imp"), F.lit(False))
-                     .alias("imputed")) for nm in feats]))
-        imp_cols = ["feature_imputed"]
-    return result.select(
-        "detector_id", "entity", "data_start_time", "data_end_time",
-        *feats, "anomaly_score", "anomaly_grade", "confidence",
-        *RING_COLS, *ent, "bucket_start", *imp_cols)
+    return _run_stateful(spark, det, now_ms, state_dir, _JOINT,
+                         stream_factory, cache_policy, cold_start_history)
 
 
 #: the reference's checkpoint TTL (AnomalyDetectorSettings.java:213-218)
@@ -1304,16 +1167,13 @@ def prune_state(spark: SparkSession, detector_id: str, state_dir: str,
     a checkpoint expiry.
 
     Both state layouts are pruned — the scalar per-(entity, feature)
-    table under ``detector_id`` and the joint multivariate table under
-    ``<detector_id>__joint`` (:func:`run_once_stateful_joint`).  Same
+    table and the joint multivariate table of
+    :func:`run_once_stateful_joint` (:func:`_state_paths`).  Same
     tmp+swap crash posture as the state writes; returns the total
     number of rows pruned.  A retention pass is idempotent."""
-    import os
-
     cutoff = now_ms - ttl_ms
     pruned = 0
-    for ident in (detector_id, f"{detector_id}__joint"):
-        spath = _state_path(state_dir, ident)
+    for spath in _state_paths(state_dir, detector_id):
         if not os.path.exists(spath):
             continue
         state = spark.read.parquet(spath)
@@ -1407,23 +1267,11 @@ def run_historical(
     n_pieces, snapshot_path)`` fires after piece ``p`` completes (or is
     skipped on resume) so a task store can record progress.
     """
-    import os
-    import shutil
-
     import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
-
-    from .features import feature_matrix
 
     impute = det.imputation_method
-    if impute == "fixed_values":
-        _missing = [f for f in det.feature_specs
-                    if f not in (det.imputation_values or {})]
-        if _missing:
-            raise ValueError(
-                f"fixed_values imputation needs a value per feature; "
-                f"missing {_missing}")
+    _check_fixed_values(det)
     fixed_vals = dict(det.imputation_values or {})
     k = det.shingle_size
     start_ms = (start_ms // det.interval_ms) * det.interval_ms
@@ -1440,13 +1288,6 @@ def run_historical(
     src = load_table(spark, det.indices)
     ext = None
     fills = None
-    if impute:
-        from .query.aggs import to_millis
-
-        rng_all = {"range": {det.time_field: {"gte": start_ms,
-                                              "lt": end_ms}}}
-        q_all = ({"bool": {"filter": [rng_all, det.filter_query]}}
-                 if det.filter_query else rng_all)
     if impute == "linear":
         # linear's fill values interpolate toward present neighbors
         # that may live in DIFFERENT pieces, but they depend only on
@@ -1469,21 +1310,13 @@ def run_historical(
         # fill table stays preview-identical by construction here.
         from .features import impute_linear
 
-        fm_all = feature_matrix(src, det.time_field, det.interval_ms,
-                                det.feature_specs,
-                                entity_cols=tuple(det.category_fields),
-                                filter_cond=compile_filter(src, q_all))
-        lin = impute_linear(fm_all, det.interval_ms, feats,
+        lin = impute_linear(_window_matrix(src, det, start_ms, end_ms),
+                            det.interval_ms, feats,
                             entity_cols=tuple(det.category_fields))
         lin = lin.filter(F.col("is_filled"))
         lin = lin if ent else lin.withColumn("_g", F.lit("_"))
-        _pairs = ", ".join(f"'{n}', cast(`{n}` as double)" for n in feats)
-        fills = (lin.select(
-            *gcols,
-            F.unix_millis(F.col("bucket_start").cast("timestamp"))
-            .alias("bucket_ms"),
-            F.expr(f"stack({len(feats)}, {_pairs})").alias("_feat", "_v"))
-            .localCheckpoint())
+        fills = _scalar_melt(lin, gcols, feats,
+                             _bucket_ms().alias("bucket_ms")).localCheckpoint()
     elif impute:
         # per-entity bucket extent over the WHOLE range, computed once
         # up front: preview's dense grid spans each entity's extent, so
@@ -1491,9 +1324,12 @@ def run_historical(
         # a piece cannot know that locally.  One raw-event min/max agg
         # (no feature evaluation); output is one small row per entity,
         # broadcast into every piece.
+        from .query.aggs import to_millis
+
         bms = (F.floor(to_millis(det.time_field) / det.interval_ms)
                * det.interval_ms)
-        ev = src.filter(compile_filter(src, q_all))
+        ev = src.filter(compile_filter(
+            src, _window_query(det, start_ms, end_ms)))
         ev = (ev.select(*ent, bms.alias("_bms")) if ent
               else ev.select(F.lit("_").alias("_g"), bms.alias("_bms")))
         ext = (ev.groupBy(*gcols)
@@ -1503,18 +1339,14 @@ def run_historical(
     # UDF's output columns are matched positionally against the schema)
     gstruct = ([src.schema[c] for c in ent] if ent
                else [T.StructField("_g", T.StringType())])
-    out_schema = T.StructType(
-        gstruct
-        + [T.StructField("_feat", T.StringType()),
-           T.StructField("bucket_ms", T.LongType()),
-           T.StructField("_z", T.DoubleType()),
-           T.StructField("_exp", T.DoubleType()),
-           T.StructField("cnt_after", T.LongType()),
-           T.StructField("vals", T.ArrayType(T.DoubleType())),
-           T.StructField("model", T.BinaryType()),
-           T.StructField("last_v", T.DoubleType()),
-           T.StructField("_vu", T.DoubleType()),
-           T.StructField("_imp", T.BooleanType())])
+    state_fields = _fields(_feat=T.StringType(), vals=_DOUBLES,
+                           scored_cnt=T.LongType(), model=T.BinaryType(),
+                           last_v=T.DoubleType())
+    out_schema = T.StructType([*gstruct, *_fields(
+        _feat=T.StringType(), bucket_ms=T.LongType(), _z=T.DoubleType(),
+        _exp=T.DoubleType(), scored_cnt=T.LongType(), vals=_DOUBLES,
+        model=T.BinaryType(), last_v=T.DoubleType(), _vu=T.DoubleType(),
+        _imp=T.BooleanType())])
 
     def snap(p: int) -> str:
         return os.path.join(results_dir, f"_state_piece_{p}")
@@ -1531,43 +1363,16 @@ def run_historical(
             continue
         lo = start_ms + p * piece_ms
         hi = min(end_ms, lo + piece_ms)
-        rng = {"range": {det.time_field: {"gte": lo, "lt": hi}}}
-        q = ({"bool": {"filter": [rng, det.filter_query]}}
-             if det.filter_query else rng)
-        fm = feature_matrix(src, det.time_field, det.interval_ms,
-                            det.feature_specs,
-                            entity_cols=tuple(det.category_fields),
-                            filter_cond=compile_filter(src, q))
-        base = fm if ent else fm.withColumn("_g", F.lit("_"))
-        pairs = ", ".join(f"'{n}', cast(`{n}` as double)" for n in feats)
-        cur = base.select(
-            *gcols,
-            F.unix_millis(F.col("bucket_start").cast("timestamp"))
-            .alias("bucket_ms"),
-            F.expr(f"stack({len(feats)}, {pairs})").alias("_feat", "_v"))
+        base = _window_matrix(src, det, lo, hi).withColumn(
+            "bucket_ms", _bucket_ms())
+        cur = _scalar_melt(base, gcols, feats, "bucket_ms")
 
         # piece p's input state: piece p-1's snapshot; piece 0 starts
         # from the live state dir (e.g. a prior run_once_stateful)
         in_state = snap(p - 1) if p > 0 and os.path.exists(snap(p - 1)) \
             else spath
-        if os.path.exists(in_state):
-            state = spark.read.parquet(in_state)
-            # snapshot written before the model / imputation columns
-            for c, t in (("model", "binary"), ("last_v", "double")):
-                if c not in state.columns:
-                    state = state.withColumn(c, F.lit(None).cast(t))
-        else:
-            state = local_df(
-                spark, [], T.StructType(
-                    gstruct
-                    + [T.StructField("_feat", T.StringType()),
-                       T.StructField("vals",
-                                     T.ArrayType(T.DoubleType())),
-                       T.StructField("scored_cnt", T.LongType()),
-                       T.StructField("model", T.BinaryType()),
-                       T.StructField("last_v", T.DoubleType())]))
-        st = state.select(*gcols, "_feat", "vals", "scored_cnt",
-                          "model", "last_v")
+        st = _read_state(spark, in_state, [*gstruct, *state_fields]).select(
+            *gcols, *[f.name for f in state_fields])
         if impute == "linear":
             # this piece's slice of the precomputed fill table rides
             # the melt itself (no join): fill rows ingest in bucket
@@ -1592,23 +1397,14 @@ def run_historical(
         # cogroup the state row crosses the wire exactly once per key.
         def fn(key, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
             vals: list = []
-            model_b = None
+            model_b = carry = None        # carry: last ingested value
             cnt = 0
-            carry = None                  # last ingested value
             if len(rpdf):
                 r0 = rpdf.iloc[0]
-                if r0["vals"] is not None and not (
-                        isinstance(r0["vals"], float)
-                        and pd.isna(r0["vals"])):
-                    vals = list(r0["vals"])
-                if r0["model"] is not None and not (
-                        isinstance(r0["model"], float)
-                        and pd.isna(r0["model"])):
-                    model_b = bytes(r0["model"])
-                if not pd.isna(r0["scored_cnt"]):
-                    cnt = int(r0["scored_cnt"])
-                if "last_v" in rpdf.columns and not pd.isna(r0["last_v"]):
-                    carry = float(r0["last_v"])
+                vals = list(r0["vals"]) if _has(r0["vals"]) else []
+                model_b = bytes(r0["model"]) if _has(r0["model"]) else None
+                cnt = 0 if pd.isna(r0["scored_cnt"]) else int(r0["scored_cnt"])
+                carry = None if pd.isna(r0["last_v"]) else float(r0["last_v"])
             if carry is None and vals:
                 carry = float(vals[-1])
             stream = None
@@ -1634,26 +1430,16 @@ def run_historical(
                         ehi = int(side[f"_ehi{sfx}"].iloc[0])
                         break
                 if elo is not None:
-                    present = {b for b, _v, _i in seq}
-                    feat_name = key[-1]
-                    glo = max(elo, lo)
-                    ghi = min(ehi, hi - det.interval_ms)
-                    merged = dict()
-                    for b, v, _i in seq:
-                        merged[b] = (v, False)
-                    b = glo
-                    while b <= ghi:
-                        if b not in present:
-                            if impute == "zero":
-                                merged[b] = (0.0, True)
-                            elif impute == "fixed_values":
-                                merged[b] = (float(fixed_vals[feat_name]),
-                                             True)
-                            # 'previous' is resolved in the ingest loop
-                            # (the carry evolves as values ingest)
-                            else:
-                                merged[b] = (None, True)
-                        b += det.interval_ms
+                    # 'previous' is resolved in the ingest loop (the
+                    # carry evolves as values ingest)
+                    fill = (float(fixed_vals[key[-1]])
+                            if impute == "fixed_values"
+                            else 0.0 if impute == "zero" else None)
+                    merged = {b: (v, False) for b, v, _i in seq}
+                    for b in range(max(elo, lo),
+                                   min(ehi, hi - det.interval_ms) + 1,
+                                   det.interval_ms):
+                        merged.setdefault(b, (fill, True))
                     seq = [(b, *merged[b]) for b in sorted(merged)]
             out = []
             for bms, v, was_imp in seq:
@@ -1670,15 +1456,7 @@ def run_historical(
                             cnt += 1
                     else:
                         if len(vals) == k:
-                            # same float sequence as zscore_scorer;
-                            # expected = the prior-window mean, the same
-                            # baseline preview uses for rule margins
-                            w = np.asarray(vals, dtype=np.float64)
-                            m = w.sum() / k
-                            m2 = (w * w).sum() / k
-                            std = np.sqrt(max(m2 - m * m, 0.0))
-                            z = (float(v) - m) / (std + eps)
-                            exp = m
+                            (z,), (exp,) = _window_z([vals], float(v), eps)
                             cnt += 1
                         vals = (vals + [float(v)])[-k:]
                     carry = float(v)
@@ -1688,10 +1466,7 @@ def run_historical(
             out.append([*key, None, None, None, cnt, vals,
                         stream.to_bytes() if stream is not None else None,
                         carry, None, None])
-            return pd.DataFrame(
-                out, columns=[*gcols, "_feat", "bucket_ms", "_z", "_exp",
-                              "cnt_after", "vals", "model", "last_v",
-                              "_vu", "_imp"])
+            return pd.DataFrame(out, columns=out_schema.fieldNames())
 
         upd = (cur.groupBy(*gcols, "_feat")
                .cogroup(st.groupBy(*gcols, "_feat"))
@@ -1702,83 +1477,13 @@ def run_historical(
         # until every piece is done, so a crashed piece always re-runs
         # against the state it started from
         new_state = (upd.filter(F.col("bucket_ms").isNull())
-                     .select(*gcols, "_feat", "vals",
-                             F.col("cnt_after").alias("scored_cnt"),
-                             "model", "last_v"))
+                     .select(*gcols, *[f.name for f in state_fields]))
         new_state.write.mode("overwrite").parquet(snap(p))
 
-        scored = upd.filter(F.col("_z").isNotNull())
-        if det.suppression_rules:
-            zw = (scored.groupBy(*gcols, "bucket_ms")
-                  .pivot("_feat", feats)
-                  .agg(F.first("_z").alias("z"),
-                       F.first("_exp").alias("exp")))
-            for n in feats:
-                zw = (zw.withColumnRenamed(f"{n}_z", f"_z_{n}")
-                      .withColumnRenamed(f"{n}_exp", f"_exp_{n}"))
-        else:
-            zw = (scored.groupBy(*gcols, "bucket_ms")
-                  .pivot("_feat", feats).agg(F.first("_z")))
-            for n in feats:
-                zw = zw.withColumnRenamed(n, f"_z_{n}")
-        cnt1 = (scored.groupBy(*gcols, "bucket_ms")
-                .agg(F.min("cnt_after").alias("_cnt")))
-        if impute:
-            # imputed buckets have no base row — feature values come
-            # from what the model actually ingested; _imp flags feed
-            # the feature_imputed result field
-            vw = (scored.groupBy(*gcols, "bucket_ms")
-                  .pivot("_feat", feats)
-                  .agg(F.first("_vu").alias("v"),
-                       F.first("_imp").alias("imp")))
-            for n in feats:
-                vw = (vw.withColumnRenamed(f"{n}_v", n)
-                      .withColumnRenamed(f"{n}_imp", f"_imp_{n}"))
-            wide = vw.withColumn("bucket_start",
-                                 F.timestamp_millis(F.col("bucket_ms")))
-        else:
-            wide = base.withColumn(
-                "bucket_ms",
-                F.unix_millis(F.col("bucket_start").cast("timestamp")))
-        out = (wide.join(zw, [*gcols, "bucket_ms"])
-               .join(cnt1, [*gcols, "bucket_ms"]))
-        for n in feats:
-            out = out.filter(F.col(f"_z_{n}").isNotNull())
-        score = F.greatest(*[F.abs(F.col(f"_z_{n}")) for n in feats]) \
-            if len(feats) > 1 else F.abs(F.col(f"_z_{feats[0]}"))
-        conf = F.least(F.lit(1.0),
-                       F.col("_cnt") / F.lit(float(det.confidence_ramp)))
-        result = (out
-                  .withColumn("anomaly_score", F.round(score, 6))
-                  .withColumn("anomaly_grade",
-                          F.round(_grade(score, det.anomaly_threshold), 6))
-                  .withColumn("confidence", F.round(conf, 6))
-                  .withColumn("detector_id", F.lit(det.detector_id))
-                  .withColumn("data_start_time", F.col("bucket_start"))
-                  .withColumn("data_end_time", F.timestamp_millis(
-                      F.col("bucket_ms") + det.interval_ms)))
-        if det.suppression_rules:
-            result = result.withColumn(
-                "anomaly_grade",
-                F.when(_rule_suppressed(det, feats), F.lit(0.0))
-                .otherwise(F.col("anomaly_grade")))
-        if ent:
-            result = with_entity(result, {c: c for c in ent})
-        else:
-            result = result.withColumn(
-                "entity",
-                F.array().cast("array<struct<name:string,value:string>>"))
-        imp_cols = []
-        if impute:
-            result = result.withColumn("feature_imputed", F.array(*[
-                F.struct(F.lit(n).alias("feature_id"),
-                         F.coalesce(F.col(f"_imp_{n}"), F.lit(False))
-                         .alias("imputed")) for n in feats]))
-            imp_cols = ["feature_imputed"]
-        (result.select(
-            "detector_id", "entity", "data_start_time", "data_end_time",
-            *feats, "anomaly_score", "anomaly_grade", "confidence",
-            *ent, "bucket_start", *imp_cols)
+        out = (_scalar_wide(upd.filter(F.col("_z").isNotNull()), base,
+                            [*gcols, "bucket_ms"], feats, det)
+               .withColumn("bucket_start", F.timestamp_millis("bucket_ms")))
+        (_anomaly_rows(out, det, feats)
          .write.mode("overwrite").parquet(
              os.path.join(results_dir, f"piece={p}")))
         with open(marker, "w") as f:
@@ -1791,14 +1496,7 @@ def run_historical(
     # here re-publishes the same content — idempotent.
     last = snap(n_pieces - 1)
     if os.path.exists(last):
-        tmp, trash = spath + ".__tmp__", spath + ".__old__"
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.copytree(last, tmp)
-        shutil.rmtree(trash, ignore_errors=True)
-        if os.path.exists(spath):
-            shutil.move(spath, trash)
-        shutil.move(tmp, spath)
-        shutil.rmtree(trash, ignore_errors=True)
+        _swap_state_dir(last, spath)
         for p in range(n_pieces):
             shutil.rmtree(snap(p), ignore_errors=True)
 

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .detector import _window_query
 from .features import feature_matrix
 from .functions.entity import with_entity
 from .query.planner import compile_filter
@@ -254,9 +255,7 @@ def run_forecast(
     forecaster = forecaster or holt_forecaster(fc.horizon)
     end = ((now_ms - fc.window_delay_ms) // fc.interval_ms) * fc.interval_ms
     hist_start = end - history_intervals * fc.interval_ms
-    rng = {"range": {fc.time_field: {"gte": hist_start, "lt": end}}}
-    q = ({"bool": {"filter": [rng, fc.filter_query]}}
-         if fc.filter_query else rng)
+    q = _window_query(fc, hist_start, end)
     src = load_table(spark, fc.indices)
     ent = list(fc.category_fields)
     gcols = ent or ["_g"]

@@ -273,21 +273,6 @@ def _minhash_aggs(num_hashes: int, seed: int) -> list[F.Column]:
     return aggs
 
 
-def _with_shingle_hash(sh: DataFrame) -> DataFrame:
-    return sh.withColumn("_x", F.pmod(F.xxhash64("_s"), F.lit(1 << 31)))
-
-
-def minhash_signatures(
-    df: DataFrame, num_hashes: int = 64, n: int = 3, seed: int = 7,
-    text_col: str = "text", id_col: str = "doc_id",
-) -> DataFrame:
-    """(doc_id, h0..h{k-1}) MinHash signature — all JVM-side: shingle →
-    xxhash64 → k permutations min-aggregated in one groupBy."""
-    sh = df.select(F.col(id_col), F.explode(_shingles(text_col, n)).alias("_s"))
-    return _with_shingle_hash(sh).groupBy(id_col).agg(
-        *_minhash_aggs(num_hashes, seed))
-
-
 def minhash_lsh_pairs(
     df: DataFrame, threshold: float = 0.5, num_hashes: int = 64,
     bands: int = 16, n: int = 3, seed: int = 7,
@@ -377,8 +362,8 @@ def minhash_lsh_pairs(
     else:
         sh_verify = sh_cached
 
-    # _x ≡ pmod(xxhash64(_s), 2³¹) exactly as _with_shingle_hash
-    # computes it — derived from the cached _h0, no re-hash of strings
+    # _x ≡ pmod(xxhash64(_s), 2³¹), the permutation input — derived
+    # from the cached _h0, no re-hash of strings
     sig = (sh_verify.withColumn("_x", F.pmod(F.col("_h0"), F.lit(1 << 31)))
            .withColumnRenamed("_id", id_col)
            .groupBy(id_col)

@@ -20,7 +20,7 @@ import os
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .detector import Detector, _state_path
+from .detector import Detector, _state_path, _state_paths
 
 
 def profile_detector(spark: SparkSession, det: Detector,
@@ -42,12 +42,10 @@ def profile_detector(spark: SparkSession, det: Detector,
       checkpoints, 0 for the z-state whose window IS the state)
     - ``last_data_time_ms``: newest ingested interval across entities
     """
-    # a detector's state lives under its id (scalar per-feature
-    # models) and/or '<id>__joint' (run_once_stateful_joint's one
-    # multivariate model per entity) — profile whichever exist
-    paths = [p for p in (_state_path(state_dir, det.detector_id),
-                         _state_path(state_dir,
-                                     f"{det.detector_id}__joint"))
+    # a detector's state lives in the scalar per-feature table and/or
+    # the joint one (run_once_stateful_joint's one multivariate model
+    # per entity) — profile whichever exist
+    paths = [p for p in _state_paths(state_dir, det.detector_id)
              if os.path.exists(p)]
     ent = list(det.category_fields)
     if not paths:
@@ -154,9 +152,7 @@ def profile_entity(spark: SparkSession, det: Detector, state_dir: str,
         "model_id": f"{det.detector_id}_entity_"
                     + ",".join(str(entity[c]) for c in ent),
     }
-    paths = [p for p in (_state_path(state_dir, det.detector_id),
-                         _state_path(state_dir,
-                                     f"{det.detector_id}__joint"))
+    paths = [p for p in _state_paths(state_dir, det.detector_id)
              if os.path.exists(p)]
     cond = None
     for c in ent:

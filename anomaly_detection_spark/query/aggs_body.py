@@ -129,16 +129,6 @@ def _dh_spec(kbody: dict[str, Any]) -> tuple[str, Any]:
         "refusing to default silently")
 
 
-def _dh_interval_ms(kbody: dict[str, Any]) -> int:
-    """Fixed milliseconds of a date_histogram body (fail on calendar)."""
-    mode, v = _dh_spec(kbody)
-    if mode != "fixed":
-        raise ValueError(
-            f"calendar_interval {v!r} is not valid here; a fixed grid "
-            "is required")
-    return v
-
-
 def _dh_bucket(kbody: dict[str, Any]) -> Column:
     """Bucket-key column of a date_histogram body (fixed or calendar)."""
     from .aggs import bucketize, bucketize_calendar

@@ -12,6 +12,38 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: share of physical memory the default driver heap takes; the rest is
+#: left to Python workers, Arrow buffers and the OS
+HEAP_FRACTION = 0.4
+HEAP_CAP_MB = 48 * 1024
+
+
+def usable_cpus() -> int:
+    """Cores this process may run on (its affinity mask, not the host's
+    core count)."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:                  # no affinity API (macOS)
+        return os.cpu_count() or 1
+
+
+def default_driver_mem(meminfo: str = "/proc/meminfo") -> str:
+    """``HEAP_FRACTION`` of physical memory (``MemTotal``), capped at
+    ``HEAP_CAP_MB`` — the driver heap is pinned (-Xms = -Xmx), so a
+    fixed size the host cannot back stops the JVM at start.  Without a
+    readable ``meminfo`` the size comes from ``sysconf``, else 1 GiB."""
+    try:
+        with open(meminfo) as f:
+            kb = next(int(line.split()[1]) for line in f
+                      if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        try:
+            kb = (os.sysconf("SC_PAGE_SIZE")
+                  * os.sysconf("SC_PHYS_PAGES") // 1024)
+        except (AttributeError, ValueError, OSError):
+            return "1024m"
+    return f"{max(1, min(HEAP_CAP_MB, int(kb * HEAP_FRACTION) // 1024))}m"
+
 
 def get_spark(
     app_name: str = "anomaly_detection_spark",
@@ -21,12 +53,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (32 in the
-    sandbox).  ``shuffle_partitions`` defaults to the core count —
-    on a real cluster you would size this to ~2-3x total cores and
-    let AQE coalesce.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (the usable
+    core count when unset).  ``shuffle_partitions`` defaults to the
+    core count — on a real cluster you would size this to ~2-3x total
+    cores and let AQE coalesce.  The driver heap is
+    ``$SPARK_DRIVER_MEM``, else :func:`default_driver_mem`.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or usable_cpus())
     master = master or f"local[{cpus}]"
     inner = master.split("[", 1)[-1].rstrip("]")
     if shuffle_partitions is None:
@@ -58,7 +91,7 @@ def get_spark(
     os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(1 << 30))
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", str(1 << 28))
 
-    driver_mem = os.environ.get("SPARK_DRIVER_MEM", "48g")
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM") or default_driver_mem()
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .detector import (Detector, TaskCancelledError, _state_path,
-                       run_historical)
+                       _state_paths, run_historical)
 
 __all__ = ["TaskStore", "start_historical_task", "profile_task",
            "update_realtime_task", "run_once_forecast_task",
@@ -396,8 +396,7 @@ def delete_detector(spark: SparkSession, jobs, tasks: TaskStore,
         os.remove(tasks._path(t))
     from .caching import _cache_path
 
-    doomed = [_state_path(state_dir, det.detector_id),
-              _state_path(state_dir, f"{det.detector_id}__joint"),
+    doomed = [*_state_paths(state_dir, det.detector_id),
               _cache_path(state_dir, det.detector_id)]
     if results_dir is not None:
         doomed.append(results_dir)
@@ -430,9 +429,7 @@ def update_realtime_task(spark: SparkSession, store: TaskStore,
         doc = store._new_task(det, task_type, "REALTIME", {})
     # min scored_cnt across the detector's state layouts (scalar +
     # joint), same definition as the detector profile
-    paths = [p for p in (_state_path(state_dir, det.detector_id),
-                         _state_path(state_dir,
-                                     f"{det.detector_id}__joint"))
+    paths = [p for p in _state_paths(state_dir, det.detector_id)
              if os.path.exists(p)]
     min_cnt = None
     for p in paths:

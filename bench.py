@@ -4,7 +4,7 @@ metric per BASELINE.json) + query latencies at $SPARK_GRAFT_SF_DIR.
 
 Prints ONE JSON line:
   {"metric": "index-build throughput", "value": <turns/sec>,
-   "unit": "sec", "queries": {...per-query seconds...}, "sf": ...}
+   "unit": "turns/s", "queries": {...per-query seconds...}, "sf": ...}
 
 Environment:
   SPARK_GRAFT_SF_DIR  testdata dir (default /root/testdata/sf0.1)
@@ -103,7 +103,7 @@ def main() -> None:
         print(json.dumps({
             "metric": "index-build throughput (turns/sec)",
             "value": round(turns_per_sec, 1),
-            "unit": "sec",
+            "unit": "turns/s",
             "queries": queries,
             "sf": sf,
             "turns": actual_turns,
@@ -474,7 +474,7 @@ def main() -> None:
     print(json.dumps({
         "metric": "index-build throughput (turns/sec)",
         "value": round(turns_per_sec, 1),
-        "unit": "sec",
+        "unit": "turns/s",
         "queries": queries,
         "sf": sf,
         "turns": actual_turns,
